@@ -67,9 +67,8 @@ object Bench {
     (contended, sentinelTripped && !contended)
   }
 
-  /** Locale-proof fixed-point formatting for every JSON-line emitter
-    * (Bench, ScaleSmoke, Q5Probe, StandingTables, and the study bench
-    * mains): the f-interpolator honors the default locale, so under a
+  /** Locale-proof fixed-point formatting for the JSON-line emitter: the
+    * f-interpolator honors the default locale, so under a
     * comma-decimal locale `f"$v%.3f"` would emit `0,544` and the
     * committed line stops being JSON.
     */
@@ -231,7 +230,6 @@ object Bench {
     val wh = java.nio.file.Files
       .createTempDirectory(Queries.tempBase, "graft_wh_")
     val spark = GraftSession.builderFor(s"local[$cpus]", cpus, sfDir)
-      .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.warehouse.dir", wh.toUri.toString)
       .config("spark.local.dir", wh.resolve("local").toString)
       .getOrCreate()
@@ -347,7 +345,7 @@ object Bench {
       .getOrElse(if (only.isDefined) "0" else "flagship")
     val forkNames = forkMode match {
       case "0" | "" => Seq.empty[String]
-      case "flagship" => names.filter(ScaleSmoke.flagshipSet.contains)
+      case "flagship" => names.filter(SparkEntry.flagshipSet.contains)
       case _ => names
     }
     def forkOne(n: String): Double = {
@@ -371,7 +369,7 @@ object Bench {
       val deadlineS = sys.env
         .getOrElse("SPARK_GRAFT_BENCH_FORK_TIMEOUT_S", "600").toLong
       val (lines, _) =
-        ChildJvm.run(cmd, Map.empty, deadlineS, s"fork of $n")
+        ChildJvm.run(cmd, deadlineS, s"fork of $n")
       // nanos as a long: locale-proof across the process boundary
       lines.collectFirst {
         case l if l.startsWith("FORK_NANOS ") =>
@@ -567,7 +565,6 @@ object BenchFork {
     val wh = java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(whBase))
     val spark = GraftSession.builderFor(s"local[$cpus]", cpus.toInt, sfDir)
-      .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.warehouse.dir", wh.toUri.toString)
       .config("spark.local.dir", wh.resolve("local").toString)
       .getOrCreate()

@@ -1,12 +1,10 @@
 package graft
 
-/** Shared plumbing for mains that fork bare `java` children (Bench's
-  * fork mode, StandingTables): the JDK-17 `--add-opens` list Spark
-  * needs when the session is created outside spark-submit (mirrors
-  * build.sbt / `JavaModuleOptions.defaultModuleOptions()`), and the
-  * watchdog-guarded start/read/kill pattern. One copy, so a JDK bump
-  * that needs one more opened package cannot be fixed in one fork site
-  * and silently crash the other.
+/** Plumbing for Bench's fork mode, which runs each query in a bare `java`
+  * child: the JDK-17 `--add-opens` list Spark needs when the session is
+  * created outside spark-submit (mirrors build.sbt /
+  * `JavaModuleOptions.defaultModuleOptions()`), and the watchdog-guarded
+  * start/read/kill pattern.
   */
 private[graft] object ChildJvm {
 
@@ -21,20 +19,11 @@ private[graft] object ChildJvm {
     .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   /** Start `cmd` (stderr merged into stdout), kill it after `timeoutS`
-    * seconds, and return (stdout lines, exit code). `env` entries apply
-    * on top of the inherited environment; a `None` value REMOVES the
-    * inherited var — basis-defining vars (e.g. SPARK_GRAFT_MASTER) must
-    * not leak from the operator's shell into a child that means to
-    * default them.
+    * seconds, and return (stdout lines, exit code).
     */
-  def run(cmd: Seq[String], env: Map[String, Option[String]],
-      timeoutS: Long, label: String): (List[String], Int) = {
+  def run(cmd: Seq[String], timeoutS: Long,
+      label: String): (List[String], Int) = {
     val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-    val penv = pb.environment()
-    env.foreach {
-      case (k, Some(v)) => penv.put(k, v)
-      case (k, None) => penv.remove(k)
-    }
     val p = pb.start()
     val watchdog = new Thread(() => {
       if (!p.waitFor(timeoutS, java.util.concurrent.TimeUnit.SECONDS)) {

@@ -82,6 +82,24 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
           initPartitionsFor(cores, inputBytes(inputDir)).toString))
 
+  /** The reader/engine contract every graft session carries — all
+    * runtime SQL confs, so [[SparkEntry.entry]] can also set them on a
+    * session a caller hands in:
+    *   - UTC session time zone;
+    *   - ANSI off: graft uses wrap-around 64-bit affine hashes (MinHash
+    *     permutations), which ANSI overflow checking would reject;
+    *   - parquet TIMESTAMP(NANOS) read as long (`events.ts`; Tables
+    *     converts it) and no NTZ inference;
+    *   - µs parquet output timestamps, so the DuckDB oracle reads
+    *     identical values.
+    */
+  val contractConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+
   def builder(master: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -96,13 +114,7 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
           (cores * 2).toString))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // graft uses wrap-around 64-bit affine hashes (MinHash permutations);
-      // ANSI overflow checking would reject that arithmetic.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config(contractConfs.toMap)
       .config("spark.ui.enabled", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

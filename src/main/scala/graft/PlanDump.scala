@@ -11,7 +11,7 @@ object PlanDump {
       "etl_map_only" -> "filters + projection pushed to the parquet scan",
       "partition_hour_ts" -> "single hash exchange, map-side partial agg (combiner)",
       "partition_skew_split" -> "two-stage salted agg: (bucket,salt) partial -> bucket final",
-      "q5_region_revenue" -> "eager-agg pushdown: revenue partial-sums below both fact-fact joins; dims broadcast; exact LONG 1e-4-unit sums at every level (r16); fourth-decade curve adjudicated fabric-bound by the Q5Probe arm sweep — the 150M-group agg itself is sub-linear (BASELINE r17)",
+      "q5_region_revenue" -> "eager-agg pushdown: revenue partial-sums below both fact-fact joins; dims broadcast; exact LONG 1e-4-unit sums at every level (r16); fourth-decade curve adjudicated fabric-bound by the r17 arm sweep — the 150M-group agg itself is sub-linear (BASELINE r17)",
       "dedup_minhash" -> "LSH band shuffle + bucket-local pairs; no cartesian product",
       "dedup_embedding" -> "exact cosine baseline; identical-vector collapse when dups exist (scale path = lshCosinePairs)",
       "ann_topk" -> "corpus streams, query frame broadcast, codegen'd CosineSim kernel, TopKPerKey partial pre-prune below the exchange",

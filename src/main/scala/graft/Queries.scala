@@ -734,7 +734,10 @@ object Queries {
     * nation-level result is bit-identical to aggregating after the
     * joins. At the 300× probe (180M lineitem) this cuts the shuffled
     * volume ~4× (the un-pushed form's two full-fact SMJ sorts were the
-    * surface's largest shuffle and its wall went memory-bound).
+    * surface's largest shuffle and its wall went memory-bound). At the
+    * fourth decade the per-order agg is sub-linear and the super-linear
+    * term is the orders-join middle; no layout, join or executor lever
+    * moved the wall (BASELINE.md r17, "The q5 experiment").
     */
   def q5RegionRevenue(s: SparkSession, dir: String): DataFrame = {
     // exact integer 1e-4-unit aggregation (r16): 300× stage forensics
@@ -747,48 +750,14 @@ object Queries {
     // decimal rescale at the end (DECIMAL(38,0)/10000 → DECIMAL(38,6),
     // exact, then a single cast to double) reproduces the oracle's
     // decimal→double rounding bit-exactly.
-    q5PlanOver(s, dir, lineitem(s, dir))
-  }
-
-  /** [[q5RegionRevenue]]'s plan over an ARBITRARY lineitem frame: the
-    * registered query passes the parquet scan; the `Q5Probe` study main
-    * passes a table bucketed on `l_orderkey` so the per-order partial agg
-    * runs bucket-local with zero exchange — the layout arm of the r16
-    * verdict's per-task group-cardinality experiment (task 1). Plan and
-    * results are otherwise identical by construction.
-    */
-  private[graft] def q5PlanOver(s: SparkSession, dir: String,
-      li: DataFrame): DataFrame =
-    q5Tail(s, dir, q5PerCust(s, dir, li))
-
-  /** q5 up to the per-customer aggregate (per-order agg → orders join →
-    * per-cust agg) — the Q5Probe arm that splits the join tail: at the
-    * fourth decade the per-order agg alone is SUB-linear (2.0× per 3.33×
-    * data on the mp basis) and the residual super-linear term lives in
-    * this join-and-reaggregate middle plus the customer join after it.
-    */
-  private[graft] def q5PerCust(s: SparkSession, dir: String,
-      li: DataFrame): DataFrame =
-    q5PerOrder(li)
+    val revE4 = (dec2(col("l_extendedprice")) * lit(100)).cast("long") *
+      (lit(100L) - (dec2(col("l_discount")) * lit(100)).cast("long"))
+    lineitem(s, dir)
+      .groupBy(col("l_orderkey"))
+      .agg(sum(revE4).as("_rev"), count(lit(1)).as("_n"))
       .join(orders(s, dir), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
       .agg(sum(col("_rev")).as("_rev"), sum(col("_n")).as("_n"))
-
-  /** q5's per-order partial aggregate alone — the stage the 300× event-log
-    * forensics put ~60% of the wall in, exposed for the Q5Probe study
-    * main's arm isolation (exact LONG 1e-4-unit sums; see
-    * [[q5RegionRevenue]] for the overflow budget).
-    */
-  private[graft] def q5PerOrder(li: DataFrame): DataFrame = {
-    val revE4 = (dec2(col("l_extendedprice")) * lit(100)).cast("long") *
-      (lit(100L) - (dec2(col("l_discount")) * lit(100)).cast("long"))
-    li.groupBy(col("l_orderkey"))
-      .agg(sum(revE4).as("_rev"), count(lit(1)).as("_n"))
-  }
-
-  private def q5Tail(s: SparkSession, dir: String,
-      perCust: DataFrame): DataFrame =
-    perCust
       .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(region(s, dir)), col("n_regionkey") === col("r_regionkey"))
@@ -797,6 +766,7 @@ object Queries {
         .cast("double").as("revenue"),
         sum(col("_n")).as("n_items"))
       .orderBy(col("r_name"), col("n_name"))
+  }
 
   val q5RegionRevenueSql: String =
     s"""SELECT r_name, n_name, CAST(SUM($sqlRev) AS DOUBLE) AS revenue,

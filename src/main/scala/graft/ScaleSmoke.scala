@@ -1,110 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale smoke: run the flagship queries on an N×-unioned copy of the sf0.1
-  * tables (N = SPARK_GRAFT_SCALE_FACTOR, default 10 — ~6M-row lineitem,
-  * 1M events, 50k docs; 30 triples that) to observe plan behavior
-  * one or more orders of magnitude up — shuffle sizing, AQE coalescing, and the
-  * near-dup pipelines' growth curves. Ids are re-keyed per replica so
-  * keyed operators see distinct entities, not 10 copies of one.
+/** Decade replica builder: writes an N×-unioned copy of the sf0.1 tables
+  * (N = SPARK_GRAFT_SCALE_FACTOR, default 10 — ~6M-row lineitem, 1M
+  * events, 50k docs) so the registered queries can be timed one or more
+  * orders of magnitude up. Ids are re-keyed per replica so keyed
+  * operators see distinct entities, not N copies of one.
+  *
+  * Decade timing is two steps — build the replica, then point Bench at it:
+  * {{{
+  *   SPARK_GRAFT_SCALE_DIR=<replica> sbt "runMain graft.ScaleSmoke <sf0.1 dir>"
+  *   SPARK_GRAFT_SF_DIR=<replica> sbt "runMain graft.Bench"
+  * }}}
+  * Bench sizes the AQE ceiling from the replica's bytes (the 2×-cores rule
+  * in [[GraftSession.initPartitionsFor]]) and routes a sweep over any dir
+  * other than the committed artifact's to `BENCH_full.partial.json`.
   */
 object ScaleSmoke {
-
-  /** The STANDING decade-probe set (BASELINE.md's maintained 30×/100×/
-    * 300×/1000× tables): the linear scan/sort controls, every query the
-    * r12–r16 scale reworks touched, the sort-spill class, and the
-    * linear star-edge dedup consumers. `SPARK_GRAFT_SCALE_ONLY=flagship`
-    * expands to this list so a decade sweep is one env var per
-    * round, not a hand-maintained query string. The fourth decade
-    * (factor 1000: 600M-row lineitem, 15 GB input) fits /dev/shm and
-    * both bases on this box; see BASELINE r16 for its protocol notes
-    * (mp page-cache rep spikes, raw-path span rows).
-    */
-  val flagshipSet: Set[String] = Set(
-    "q1_pricing", "etl_cast_rename", "ann_topk", "oov_rate",
-    "asof_packed", "stream_asof_enrich", "weighted_median",
-    "rfm_segments", "novelty_ngrams", "sliding_percentile", "span_dedup",
-    "triangle_parts", "q5_region_revenue", "dedup_stats",
-    "dedup_clusters", "dedup_levenshtein_clusters", "containment_stats")
-
-  /** The decade-harness SparkSession, factored for reuse by the study
-    * mains (Q5Probe): tmpfs-or-disk spill base sized to the decade,
-    * leak-proof local dir, and the `SPARK_GRAFT_MASTER` local-cluster
-    * override with app-jar shipping. Returns the session; the shutdown
-    * hook reclaims the local dir.
-    */
-  private[graft] def scaleSession(cpus: Int, factor: Int): org.apache.spark.sql.SparkSession = {
-    val spillBase = sys.env.get("SPARK_GRAFT_SPILL_DIR")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse {
-        val needBytes = math.max(8L, factor.toLong / 4) << 30
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val usable = try {
-          if (java.nio.file.Files.isWritable(shm))
-            java.nio.file.Files.getFileStore(shm).getUsableSpace
-          else 0L
-        } catch { case _: java.io.IOException => 0L }
-        if (usable >= needBytes) shm
-        else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      }
-    java.nio.file.Files.createDirectories(spillBase)
-    val local = java.nio.file.Files
-      .createTempDirectory(spillBase, "graft_scale_local_")
-    // Spark removes its inner spark-* trees on stop but not this parent:
-    // reclaim it on exit (shutdown hook covers the killed-run case that
-    // leaked a dozen empty dirs into /dev/shm across r13-r14)
-    Runtime.getRuntime.addShutdownHook(
-      new Thread(() => Queries.rmTree(local.toFile)))
-    // SPARK_GRAFT_MASTER overrides the single-JVM local[k] master — the
-    // r15 verdict's open question was whether 300×-decade tail rows are
-    // plan behavior or artifacts of ONE 48 GB JVM aging across reps; a
-    // real cluster resets per-executor heaps by construction, and master
-    // local-cluster[4,8,12288] measures that basis on this box. Executors
-    // are real child processes that fetch the app jar from the driver, so
-    // this path needs `sbt package` first and SPARK_GRAFT_APP_JAR (or the
-    // default target/scala-2.13 jar) on disk.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b0 = GraftSession.builder(master, cpus)
-      .config("spark.local.dir", local.toString)
-    val b1 = if (master.startsWith("local-cluster")) {
-      val jar = sys.env.getOrElse("SPARK_GRAFT_APP_JAR", {
-        val dir = java.nio.file.Paths.get("target/scala-2.13")
-        val s = java.nio.file.Files.list(dir)
-        try s.filter(_.toString.endsWith(".jar")).findFirst()
-          .orElseThrow(() => new IllegalStateException(
-            s"local-cluster master needs the app jar — run `sbt package` " +
-              s"(looked in $dir)")).toString
-        finally s.close()
-      })
-      // worker memory is the [n,cores,MB] third field; leave the executor
-      // 1 GiB under it for non-heap overhead so the worker can place it
-      val workerMb = master.replaceAll("[^0-9,]", "").split(",")(2).toLong
-      b0.config("spark.jars", jar)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM",
-            s"${math.max(1024L, workerMb - 1024L)}m"))
-    } else b0
-    // SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v pairs applied last —
-    // the A/B instrument for session-level knobs the harness doesn't
-    // model (e.g. spark.sql.files.maxPartitionBytes for the q5 per-task
-    // group-cardinality experiment, r16 verdict task 1). Study knob, not
-    // a production path: values land verbatim in the session.
-    val withExtra = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Nil)
-      .foldLeft(b1) { (b, kv) =>
-        kv.split("=", 2) match {
-          case Array(k, v) => b.config(k, v)
-          case _ => b
-        }
-      }
-    val spark = withExtra.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     // SPARK_GRAFT_SCALE_DIR pins the amplified-table location and reuses
@@ -125,30 +38,18 @@ object ScaleSmoke {
         scala.util.Try(java.nio.file.Files.readString(marker.toPath).trim)
           .getOrElse("") != stamp
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // shuffle/sort spill on tmpfs when it can actually hold the spill:
-    // at the 300× decade the external sorts spill tens of GB, and this
-    // sandbox's backing disk absorbs that at pathological throughput
-    // (measured: triangle_parts 297→112 s at 300× from the spill
-    // destination alone) — a cluster's local SSDs are the production
-    // analogue. SPARK_GRAFT_SPILL_DIR overrides; otherwise /dev/shm is
-    // used only with headroom PROPORTIONAL to the decade (Queries
-    // .tempBase's 4 GiB floor is sized for harness landing residue, not
-    // shuffle spill — a modest shm would ENOSPC mid-run or eat the RAM
-    // the spill was meant to relieve), else the system tmpdir. All of
-    // this plus the local-cluster master override lives in scaleSession
-    // (shared with the study mains).
-    val spark = scaleSession(cpus, factor)
-    def amplify(name: String, keyCols: Map[String, Long]): Unit = {
-      val src = Tables.table(spark, base, name)
-      val copies = (0 until factor).map { r =>
-        keyCols.foldLeft(src) { case (df, (c, stride)) =>
-          df.withColumn(c, col(c) + lit(r * stride))
-        }
-      }.reduce(_ unionByName _)
-      copies.write.mode("overwrite").parquet(s"$out/$name.parquet")
-    }
     if (rebuild) {
+      val spark = GraftSession.local(sys.env.get("SPARK_GRAFT_CPUS")
+        .map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors()))
+      def amplify(name: String, keyCols: Map[String, Long]): Unit = {
+        val src = Tables.table(spark, base, name)
+        val copies = (0 until factor).map { r =>
+          keyCols.foldLeft(src) { case (df, (c, stride)) =>
+            df.withColumn(c, col(c) + lit(r * stride))
+          }
+        }.reduce(_ unionByName _)
+        copies.write.mode("overwrite").parquet(s"$out/$name.parquet")
+      }
       // strides larger than any real key range keep replicas disjoint
       amplify("lineitem", Map("l_orderkey" -> 10000000L))
       amplify("orders", Map("o_orderkey" -> 10000000L, "o_custkey" -> 1000000L))
@@ -161,57 +62,9 @@ object ScaleSmoke {
           .parquet(s"$out/$t.parquet")
       }
       java.nio.file.Files.writeString(marker.toPath, stamp + "\n")
-      ()
+      spark.stop()
     }
-    // input-conditional AQE ceiling (r16): the amplified dir now exists,
-    // so size it and apply the same rule Bench uses at session build —
-    // a runtime SQL conf, settable post-build. Decade dirs (477 MB+)
-    // always clear the small-input threshold, keeping the measured
-    // 2×-cores ceiling the r15 A/B chose there.
-    spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-        GraftSession.initPartitionsFor(
-          cpus, GraftSession.inputBytes(out)).toString))
-
-    // the full registered surface (the report queries drain the listener
-    // bus / run their own fault-injected actions, not timeable queries;
-    // SPARK_GRAFT_SCALE_ONLY restricts for iteration)
-    val skip = Set("task_report", "task_report_retry")
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(v => if (v.trim == "flagship") flagshipSet
-                else v.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.keys.toSeq.filterNot(skip).sorted
-      .filter(n => only.forall(_.contains(n)))
-    spark.range(1000000L).selectExpr("sum(id)").collect() // warm
-    // SPARK_GRAFT_SCALE_REPS=N times each query N times in THIS JVM and
-    // reports every rep: single fresh-JVM probes at the 300× decade swing
-    // ±30-50% (page-cache / JIT / first-run state), so arm comparisons
-    // need in-JVM repeats where those confounds are shared
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "1").toInt
-    val results = names.flatMap { name =>
-      (1 to reps).map { r =>
-        // cold per rep (same reset as Bench's cold pass): accumulated
-        // checkpoint/cache state from earlier queries otherwise evicts the
-        // current query's own caches at 30× and inflates it up to 4× —
-        // the run-order artifact class every round has had to re-measure
-        // isolated; clearing makes scale rows diffable directly
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, out)
-          .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] $name failed: ${e.getMessage}") }
-        Queries.purgeTempDirs()
-        (if (reps == 1) name else s"$name#$r") ->
-          (System.nanoTime() - t0) / 1e9
-      }
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + Bench.jnum(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"scale${factor}x","queries":$qs,"base":"$base","master":"${spark.sparkContext.master}"}""")
-    spark.stop()
+    println(s"[scale] ${factor}x replica of $base at $out" +
+      (if (rebuild) "" else " (reused)"))
   }
 }

@@ -1,28 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // managed-table queries (join_bucketed, resume harness) write through
     // the warehouse: keep it on the harness tmpfs, not the repo CWD
     val wh = Files.createTempDirectory(Queries.tempBase, "graft_wh_")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    // the same session Bench and users run, so the oracle checks it
+    val spark = GraftSession.builderFor(s"local[$cpus]", cpus, sfDir)
       .config("spark.sql.warehouse.dir", wh.toUri.toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // graft engine contract: wrap-around 64-bit hash arithmetic (ANSI off),
-      // µs parquet timestamps so the DuckDB oracle reads identical values.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

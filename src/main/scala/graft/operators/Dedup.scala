@@ -755,6 +755,18 @@ object Dedup {
           .map(i => (keys(i), find(keys(i))))
   }
 
+  /** The pointer-doubling engage round for [[clusters]] from the raw
+    * `SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM` value (default 6); malformed or
+    * negative values are rejected, naming the variable and the value.
+    */
+  private[graft] def shortcutFromSetting(raw: Option[String]): Int =
+    raw.fold(6) { v =>
+      v.trim.toIntOption.filter(_ >= 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM must be a non-negative " +
+            s"integer, got '$v'"))
+    }
+
   /** Connected components over near-dup pairs: every doc gets the minimum
     * id reachable through the pair graph (`root`), so "keep one per
     * cluster" = `where id = root`. Ids must be integral (see
@@ -773,8 +785,9 @@ object Dedup {
     * primitive long arrays (16 B/node) broadcast to a distributed frame,
     * never a boxed row seq. Above the cap: iterative min-label propagation, two shuffles
     * per round, rounds = graph diameter (near-dup clusters are shallow;
-    * `maxIter` bounds pathological chains). Both paths produce the
-    * identical min-reachable labeling.
+    * `maxIter` bounds pathological chains, and a run that exhausts it
+    * unconverged throws rather than return non-minimal roots). Both paths
+    * produce the identical min-reachable labeling.
     */
   def clusters(ids: DataFrame, pairs: DataFrame, maxIter: Int = 10,
       driverEdgeLimit: Long = 1L << 21): DataFrame = {
@@ -852,7 +865,7 @@ object Dedup {
     // rounds. So the shortcut engages only from round `shortcutFrom`
     // on: real corpora (diameter ≲ 5) never pay it, while a
     // pathological deep chain — which plain propagation would leave
-    // UNCONVERGED at maxIter, silently returning non-minimal roots —
+    // UNCONVERGED at maxIter (and fail the call below) —
     // still closes within the round budget (reach ≈ shortcutFrom ·
     // 2^(maxIter−shortcutFrom), ~96 hops at the defaults vs 10
     // plain). Exactness: every intermediate root is the min over SOME
@@ -864,8 +877,8 @@ object Dedup {
     // SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM overrides the engage round.
     val shortcutOff = sys.env
       .get("SPARK_GRAFT_CLUSTERS_NO_SHORTCUT").exists(_.trim == "1")
-    val shortcutFrom = sys.env
-      .getOrElse("SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM", "6").toInt
+    val shortcutFrom =
+      shortcutFromSetting(sys.env.get("SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM"))
     var shortcuts = 0
     while (iter < maxIter && !converged) {
       val viaNeighbors = edges
@@ -894,6 +907,12 @@ object Dedup {
       prevSum = s
       iter += 1
     }
+    // an unconverged labeling has non-minimal roots: a wrong answer that
+    // looks plausible, so fail instead of returning it
+    if (!converged) throw new IllegalStateException(
+      s"Dedup.clusters: distributed min-label propagation did not " +
+        s"converge after $iter round(s) ($shortcuts shortcut) with " +
+        s"maxIter=$maxIter; raise maxIter")
     System.err.println(s"[clusters] distributed min-label path: $iter " +
       s"round(s) ($shortcuts shortcut), converged=$converged")
     // untouched nodes are their own root

@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * consumers — count_distinct + join back — and relied on ReuseExchange
   * to fold their twin exchanges; it never did, because the outer
   * n_windows join infers isnotnull(doc_id) into only the probe-side
-  * copy, breaking canonical equality. See graft.ReuseProbe.)
+  * copy, breaking canonical equality. See BASELINE.md r18, "Why
+  * ReuseExchange never folded them".)
   *
   * Verbatim-dup collapse (r16): web-scale corpora are dominated by
   * verbatim copies, and stride-1 windows multiply that redundancy by
@@ -94,10 +95,11 @@ object SpanDedup {
     * margin sits ≥ 5σ above the rsd. Corpora in the gray zone (true
     * duplication within ~rsd of the margin) may take either branch —
     * both exact, and at ≤ ~margin× duplication the two branches' costs
-    * are within the margin of each other by construction.
+    * are within the margin of each other by construction. Empty input
+    * (n = 0) has nothing to collapse and takes the raw branch.
     */
   private[graft] def collapseWorthIt(n: Long, dApprox: Long,
-      margin: Double): Boolean = n >= margin * dApprox
+      margin: Double): Boolean = n > 0 && n >= margin * dApprox
 
   /** HLL++ relative standard deviation for every dispatch probe. */
   private[graft] val probeRsd = 0.02
@@ -266,7 +268,7 @@ object SpanDedup {
     // only feeds count_distinct, which infers no constraint), so the two
     // subtrees stopped canonicalizing equal and both ReuseExchange and
     // AQE's stage cache missed — measured twice-run ~4,000 s-CPU build
-    // stages at the 1000× decade (graft.ReuseProbe; BASELINE r18).
+    // stages at the 1000× decade (BASELINE.md r18).
     val dup = wins.groupBy(col("h"), col("doc_id"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("nd", count(lit(1)).over(Window.partitionBy(col("h"))))

@@ -229,17 +229,6 @@ class BenchGuardSpec extends AnyFunSuite {
       Seq("a" -> ((1.0, 3.0)), "b" -> ((0.5, 0.7))))
   }
 
-  test("StandingTables.parseReps reads a child's scale line: rep order, " +
-      "bare single-rep names, prefix-safe query matching") {
-    val line = """{"metric":"scale300x","queries":{"span_dedup#2":28.810,""" +
-      """"span_dedup#1":28.453,"span_dedup_x#1":9.9},"base":"b"}"""
-    assert(StandingTables.parseReps(Seq("noise", line), "span_dedup") ==
-      Seq(28.453, 28.810))
-    val single = """{"metric":"scale1000x","queries":{"q1_pricing":61.2}}"""
-    assert(StandingTables.parseReps(Seq(single), "q1_pricing") == Seq(61.2))
-    assert(StandingTables.parseReps(Seq("no json here"), "q").isEmpty)
-  }
-
   test("jnum formats with '.' decimals independent of default locale") {
     val prev = java.util.Locale.getDefault
     try {

@@ -407,6 +407,34 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     val got = Dedup.clusters(ids, pairs, driverEdgeLimit = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (1L to n).map(_ -> 1L).toMap)
+    // three plain rounds (shortcut engages from round 6) cannot close it:
+    // the call must fail loudly, not return non-minimal roots
+    val e = intercept[IllegalStateException] {
+      Dedup.clusters(ids, pairs, maxIter = 3, driverEdgeLimit = 0L)
+    }
+    assert(e.getMessage.contains("Dedup.clusters"), e.getMessage)
+    assert(e.getMessage.contains("3 round(s)"), e.getMessage)
+    assert(e.getMessage.contains("maxIter=3"), e.getMessage)
+  }
+
+  test("clusters: SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM parsing") {
+    assert(Dedup.shortcutFromSetting(None) === 6)
+    assert(Dedup.shortcutFromSetting(Some("0")) === 0)
+    assert(Dedup.shortcutFromSetting(Some(" 3 ")) === 3)
+    Seq("", "six", "2.5", "-1").foreach { v =>
+      val e = intercept[IllegalArgumentException] {
+        Dedup.shortcutFromSetting(Some(v))
+      }
+      assert(e.getMessage.contains("SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM"))
+      assert(e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
+  test("collapseWorthIt: empty input takes the raw branch") {
+    import graft.operators.SpanDedup.{collapseWorthIt, spanMargin}
+    assert(!collapseWorthIt(0, 0, spanMargin))
+    assert(!collapseWorthIt(100, 100, spanMargin))
+    assert(collapseWorthIt(300, 100, spanMargin))
   }
 
   test("clusters: Long.MinValue id works on both strategy paths") {
